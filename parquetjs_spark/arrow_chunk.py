@@ -358,7 +358,11 @@ def _select_string_codec(
             # demand if FSST wins — see chunk.PROBE_TRAIN_BYTES rationale
             table = None
             if fsst_state is not None:
-                table = fsst_state.get("table") or fsst_state.get("probe_table")
+                # `is None`, not `or`: an empty table ([] from a sample
+                # with no repeated byte) is a trained table
+                table = fsst_state.get("table")
+                if table is None:
+                    table = fsst_state.get("probe_table")
             if table is None:
                 table = fsst.train(concat[:PROBE_TRAIN_BYTES])
                 if fsst_state is not None:

@@ -25,7 +25,7 @@ from typing import Iterable, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark import TaskContext
+from pyspark import StorageLevel, TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -1921,6 +1921,17 @@ def write_encoded(
     /root/reference/lib/writer.js:147-149), stored as its own tiny
     table.
 
+    The encode runs exactly once per call, as the reference writer
+    emits page bytes and ColumnMetaData from one encode (reference
+    lib/writer.js:424-477): an uncached ``blob_df`` is persisted
+    (default storage level) for the duration of the call, so ``blobs/``
+    and ``manifest/`` are written from one execution and the manifest
+    describes exactly the stored bytes, ``wall_ms`` included.  The
+    trade is memory: the encoded table, about ``size_ratio`` x the
+    content bytes, is held in the block manager until the call
+    returns.  A ``blob_df`` the caller already cached is used as is
+    and stays cached.
+
     ``partition_by_column=True`` lays the blob table out as one storage
     partition per encoded column.  decode_column/scan_* filter on
     ``column``, so Catalyst partition-pruning then skips the other
@@ -1936,11 +1947,20 @@ def write_encoded(
     kv: dict[str, str] = {}
     if mode == "append":
         kv.update(read_metadata(spark, path))
-    wr = blob_df.write.mode(mode)
-    if partition_by_column:
-        wr = wr.partitionBy("column")
-    wr.parquet(f"{path}/blobs")
-    blob_df.select(*MANIFEST_COLUMNS).write.mode(mode).parquet(f"{path}/manifest")
+    # mapInArrow cannot be pruned: without the persist the manifest
+    # projection re-runs the whole encode
+    owned = blob_df.storageLevel == StorageLevel.NONE
+    if owned:
+        blob_df.persist()
+    try:
+        wr = blob_df.write.mode(mode)
+        if partition_by_column:
+            wr = wr.partitionBy("column")
+        wr.parquet(f"{path}/blobs")
+        blob_df.select(*MANIFEST_COLUMNS).write.mode(mode).parquet(f"{path}/manifest")
+    finally:
+        if owned:
+            blob_df.unpersist()
     # the manifest on disk just changed — a cached (col_idx, dtype) map
     # for this path is now stale and would silently drive decode with
     # the OLD schema after an overwrite-recast; drop it

@@ -25,9 +25,10 @@ def encode_stream(
 ) -> StreamingQuery:
     """Start a streaming encode of `stream_df` (a readStream DataFrame).
 
-    Each micro-batch: encode -> append blobs + manifest.  batch_id is
-    folded into part_id space by offsetting chunk_seq, so chunk identity
-    (part_id, chunk_seq, column) stays unique across batches."""
+    Each micro-batch: encode -> ``write_encoded(mode="append")``.
+    batch_id is folded into part_id space by offsetting chunk_seq, so
+    chunk identity (part_id, chunk_seq, column) stays unique across
+    batches."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
@@ -38,31 +39,10 @@ def encode_stream(
             "chunk_seq",
             (F.lit(int(batch_id)) * F.lit(1 << 32) + F.col("chunk_seq")).cast("long"),
         )
-        # one encode per batch: without the persist, the blobs write AND
-        # the manifest projection each re-ran the whole encode stage
-        # (2x the batch's encode CPU + source read, every micro-batch).
-        # Scoped to this batch and released before return — not a
-        # library-owned cache.
-        blobs = blobs.persist()
-        try:
-            blobs.write.mode("append").parquet(f"{output_path}/blobs")
-            blobs.select(*pipeline.MANIFEST_COLUMNS).write.mode("append").parquet(
-                f"{output_path}/manifest"
-            )
-        finally:
-            blobs.unpersist()
-        # every batch mutates the manifest; a driver-side metadata
-        # cache entry from a mid-stream read would go stale otherwise
-        pipeline._META_CACHE.pop(output_path, None)
-        # sha-format marker, same as write_encoded: without it a
-        # streamed table would read as "old hash format" to verify.
-        # Overwritten every batch (one tiny file) so a checkpoint
-        # restart that skips batch 0 still lands it.
-        spark = batch_df.sparkSession
-        spark.createDataFrame(
-            [(pipeline._SHA_FORMAT_KEY, str(pipeline.SHA_FORMAT_VERSION))],
-            "key string, value string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{output_path}/meta")
+        # an append carries the table's user KV forward and re-lands
+        # the sha-format marker every batch, so a checkpoint restart
+        # that skips batch 0 still has it
+        pipeline.write_encoded(blobs, output_path, mode="append")
 
     writer = (
         stream_df.writeStream.foreachBatch(process_batch)

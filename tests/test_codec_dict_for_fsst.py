@@ -182,6 +182,69 @@ def test_fsst_overlap_pin_check_and_fallback_agree():
     assert fast == slow == text
 
 
+def test_selector_reuses_empty_fsst_table(monkeypatch):
+    """A sample with no repeated byte trains an empty symbol table.
+    ``[]`` is still a trained table: the selector probe reuses it on
+    every re-selection instead of training again, whether the state
+    holds it as the probe table or as the encoder's full table."""
+    import pyarrow as pa
+
+    from parquetjs_spark import arrow_chunk, chunk as chunklib
+
+    trains = []
+    train = fsst.train
+
+    def counting_train(*a, **k):
+        trains.append(1)
+        return train(*a, **k)
+
+    monkeypatch.setattr(fsst, "train", counting_train)
+    rng = np.random.default_rng(11)
+
+    def incompressible() -> list[bytes]:
+        # 256 distinct bytes cut into 16 variable-length values
+        data = rng.permutation(256).astype(np.uint8).tobytes()
+        cuts = np.sort(rng.choice(np.arange(1, 256), 15, replace=False)).tolist()
+        return [data[a:b] for a, b in zip([0, *cuts], [*cuts, 256])]
+
+    # enough chunks that the decision cache expires and the probe re-runs
+    chunks = 2 * chunklib.SEL_CACHE_USES + 3
+
+    def encode_auto(state: dict) -> set[str]:
+        return {
+            arrow_chunk.encode_arrow_column(
+                pa.array(incompressible(), pa.binary()), "binary",
+                fsst_state=state,
+            )[1]["codec"]
+            for _ in range(chunks)
+        }
+
+    probe_state: dict = {}
+    assert encode_auto(probe_state) == {"PLAIN"}
+    assert probe_state["probe_table"] == [] and len(trains) == 1
+
+    # the encoder's full table is empty: the probe must use it as is
+    trains.clear()
+    full_state: dict = {}
+    arrow_chunk.encode_arrow_column(
+        pa.array(incompressible(), pa.binary()), "binary", codec="FSST",
+        fsst_state=full_state,
+    )
+    assert full_state["table"] == [] and len(trains) == 1
+    assert encode_auto(full_state) == {"PLAIN"}
+    assert len(trains) == 1 and "probe_table" not in full_state
+
+    # the pandas-path selector shares the policy
+    trains.clear()
+    state: dict = {}
+    chunklib._encode_values(incompressible(), "binary", "FSST", None, state)
+    picks = {
+        chunklib.select_codec(incompressible(), "binary", state)[0]
+        for _ in range(chunks)
+    }
+    assert picks == {"PLAIN"} and len(trains) == 1
+
+
 class TestReadOptimizedProfile:
     """VERDICT r6 #3: decode-cost-aware selection.  The default profile
     selects by measured size alone (unchanged behavior); the
@@ -198,6 +261,48 @@ class TestReadOptimizedProfile:
         # a cold scan
         assert DECODE_MBPS[INCR] < DECODE_MBPS[FSST] < DECODE_MBPS[PLAIN]
         assert READ_IO_MBPS < DECODE_MBPS[PLAIN]
+
+    def test_decode_cost_table_covers_every_candidate(self, monkeypatch):
+        # _pick indexes DECODE_MBPS[c] under read_optimized only: a
+        # candidate missing from the table would raise KeyError there
+        # and nowhere else
+        import pyarrow as pa
+
+        from parquetjs_spark import chunk as chunklib
+        from parquetjs_spark.arrow_chunk import _select_string_codec, _strblock_from_pa
+        from parquetjs_spark.codecs import CODEC_IDS
+
+        supported = {
+            c for c in CODEC_IDS for d in chunklib.DTYPE_IDS
+            if chunklib.codec_supports(c, d)
+        }
+        assert supported <= set(chunklib.DECODE_MBPS)
+
+        seen: set[str] = set()
+        pick = chunklib._pick
+
+        def spy(cands, content_bytes, profile):
+            seen.update(cands)
+            return pick(cands, content_bytes, profile)
+
+        monkeypatch.setattr(chunklib, "_pick", spy)
+        rng = np.random.default_rng(5)
+        words = [f"word{i} " * (1 + i % 7) for i in range(300)]
+        text = [words[i].encode() for i in rng.integers(0, 300, 4096)]
+        fixed = [rng.bytes(16) for _ in range(4096)]
+        blocks = [_strblock_from_pa(pa.array(v, pa.binary())) for v in (text, fixed)]
+        for block in [*blocks, self._sorted_path_block()]:
+            _select_string_codec(block, None, profile="read_optimized")
+        numeric = {
+            "int64": np.arange(4096, dtype=np.int64) * 1_000_003,
+            "int32": rng.integers(0, 4, 4096).astype(np.int32),
+            "float64": np.cumsum(rng.random(4096)),
+            "float32": rng.random(4096).astype(np.float32),
+            "timestamp_us": 1_600_000_000_000_000 + np.arange(4096, dtype=np.int64),
+        }
+        for dtype, vals in numeric.items():
+            chunklib.select_codec(vals, dtype, profile="read_optimized")
+        assert seen and seen <= set(chunklib.DECODE_MBPS)
 
     @staticmethod
     def _sorted_path_block():

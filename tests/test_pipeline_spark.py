@@ -542,6 +542,34 @@ def test_write_encoded_partitioned_by_column(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "partition_by_column,cached", [(False, False), (True, False), (False, True)]
+)
+def test_write_encoded_manifest_matches_blobs(
+    spark, tmp_path, partition_by_column, cached
+):
+    """One encode per write: the manifest describes exactly the stored
+    blobs, down to each chunk's own encode timing (``wall_ms``).  The
+    input's cache state is the caller's: uncached stays uncached,
+    cached stays cached."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    blobs = pipeline.encode_columns(df, chunk_rows=512)
+    if cached:
+        blobs.cache()
+    out = str(tmp_path / "enc")
+    try:
+        pipeline.write_encoded(blobs, out, partition_by_column=partition_by_column)
+        assert blobs.is_cached is cached
+        assert blobs.storageLevel.useMemory is cached
+    finally:
+        blobs.unpersist()
+    manifest = pipeline.read_manifest(spark, out)
+    stored = pipeline.read_encoded(spark, out).select(*pipeline.MANIFEST_COLUMNS)
+    assert manifest.count() > 2
+    assert manifest.exceptAll(stored).count() == 0
+    assert stored.exceptAll(manifest).count() == 0
+
+
 def test_time_roundtrip_spark(spark):
     """Spark 4 TimeType end-to-end through the mapInArrow pipeline
     (TIME is config-gated in this Spark build)."""

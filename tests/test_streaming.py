@@ -40,6 +40,26 @@ def test_stream_encode_roundtrip(tmp_path, spark):
     )
 
 
+def test_stream_append_keeps_user_metadata(tmp_path, spark):
+    """A stream appending into a table written with user KV metadata
+    keeps that metadata (and the sha-format marker)."""
+    src_dir = tmp_path / "in_kv"
+    out = str(tmp_path / "out_kv")
+    df = load_table(spark, SF, "region")
+    pipeline.write_encoded(pipeline.encode_columns(df), out, metadata={"job": "1"})
+    df.write.parquet(str(src_dir))
+
+    stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
+    q = encode_stream(stream, out, str(tmp_path / "ck_kv"), trigger_once=True)
+    q.awaitTermination(120)
+
+    assert pipeline.read_metadata(spark, out) == {"job": "1"}
+    assert pipeline.read_sha_format(spark, out) == pipeline.SHA_FORMAT_VERSION
+    manifest = pipeline.read_manifest(spark, out)
+    rows = manifest.where(F.col("column") == "r_name").agg(F.sum("n")).collect()
+    assert rows[0][0] == 2 * df.count()
+
+
 def test_stream_decode_follows_encode(tmp_path, spark):
     """encode_stream -> decode_stream pipe: chunks appended by the
     encode stream are decoded exactly once to value rows."""
