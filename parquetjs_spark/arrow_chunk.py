@@ -316,11 +316,13 @@ def _select_string_codec(
     # probes below were always byte-capped; the dict probe was not).
     # Long-value columns probe ~SAMPLE_BYTES worth of values instead —
     # cardinality ratios at that size are as decisive, and short-string
-    # columns (where dict actually wins) never hit the byte cap.
+    # columns (where dict actually wins) never hit the byte cap.  The
+    # cap is on bytes alone: the first values reaching SAMPLE_BYTES,
+    # so a sample overshoots by at most one value (and is never empty).
     k = min(n, SAMPLE_VALUES)
     rel = block.offsets - block.offsets[0]
     if rel[k] > SAMPLE_BYTES:
-        k = min(k, max(64, int(np.searchsorted(rel, SAMPLE_BYTES))))
+        k = int(np.searchsorted(rel, SAMPLE_BYTES))
     sample = block.slice_values(k)
     arr = sample.to_pa(binary=True)
     denc = pc.dictionary_encode(arr)

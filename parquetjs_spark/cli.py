@@ -8,7 +8,7 @@ Packaging:
         --output /data/encoded --columns content,path --salt-key repo
 
 Subcommands:
-    encode        parquet table -> blob+manifest tables (resumable)
+    encode        parquet table -> blob table + manifest view (resumable)
     decode        blob table + column -> parquet of values
     decode-table  blob table -> parquet of the original rows (cursor analogue)
     scan/where    pruned scans (zone maps + blooms, compound predicates)

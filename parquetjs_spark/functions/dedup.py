@@ -78,7 +78,12 @@ def _list_i64_parts(col) -> tuple[np.ndarray, np.ndarray]:
         col = col.combine_chunks()
     if len(col) == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False).astype(np.int64)
+    lens = pc.list_value_length(col)
+    if lens.null_count:
+        # a null row owns no values (list_flatten skips it); as NaN the
+        # int64 cast below would read -2**63
+        lens = lens.fill_null(0)
+    lens = lens.to_numpy(zero_copy_only=False).astype(np.int64)
     flat = pc.list_flatten(col).to_numpy(zero_copy_only=False).astype(np.int64)
     return lens, flat
 

@@ -25,7 +25,7 @@ from typing import Iterable, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark import StorageLevel, TaskContext
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -943,7 +943,12 @@ def _manifest_meta(
     try:
         import pyarrow.dataset as pads
 
-        ds = pads.dataset(f"{path}/manifest", format="parquet")
+        # hive partitioning recovers ``column`` from the directory names
+        # of a partition_by_column table, pinned to string so a name
+        # like "2024" is not read back as an int; the projection below
+        # leaves the ``data`` pages unread
+        hive = pads.HivePartitioning(pa.schema([("column", pa.string())]))
+        ds = pads.dataset(f"{path}/blobs", format="parquet", partitioning=hive)
         # driver-side read is the zero-job fast path, but a 100 TB
         # table's manifest is ~25 M rows — above a size cap fall through
         # to the distributed distinct instead of pulling it all here
@@ -956,8 +961,8 @@ def _manifest_meta(
         cols = {n: tbl[n].to_pylist() for n in names}
     except Exception:
         # non-local filesystem pyarrow can't reach: one tiny Spark job
-        # over the manifest (never the blob table)
-        mdf = spark.read.parquet(f"{path}/manifest")
+        # over the manifest projection (data pages stay unread)
+        mdf = read_manifest(spark, path)
         names = [c for c in ("column", "col_idx", "dtype") if c in mdf.columns]
         rows = mdf.select(*names).distinct().collect()
         cols = {n: [r[n] for r in rows] for n in names}
@@ -1276,8 +1281,9 @@ def _predicate_keepset(
     zone-map/bloom/n_nulls kept row groups (metadata-only semi-joins),
     and returns (blob_df_with_stats, keep_df, specs) where specs is a
     list of (column, kind, value, spark_type) residual predicates with
-    kind in ge/le/eq/isnull — callers apply them exactly, Spark-side or
-    NumPy-side."""
+    kind in ge/le/eq/isnull and value already in the column's type
+    (_residual_literal) — callers apply them exactly, Spark-side or
+    arrow-side."""
     ranges = dict(ranges or {})
     eqs = dict(eqs or {})
     if not ranges and not eqs:
@@ -1292,11 +1298,13 @@ def _predicate_keepset(
         rows = blob_df.where(F.col("column") == col)
         dtype = _resolve_dtype(rows, col, None, meta_src=blob_df)
         styp = spark_type_of(dtype)
-        # ISO-string temporal bounds coerce ONCE here, driver-side:
-        # Spark lit() and the DML numpy mask then see the same typed
-        # value (and a bad literal fails before any job starts)
-        lo = _coerce_temporal_value(lo, dtype) if lo is not None else None
-        hi = _coerce_temporal_value(hi, dtype) if hi is not None else None
+        # bounds convert ONCE here, driver-side: Spark lit() and the
+        # DML arrow mask then see the same typed value (and a bad
+        # literal fails before any job starts)
+        if lo is not None:
+            lo = _residual_literal(col, _coerce_temporal_value(lo, dtype), dtype)
+        if hi is not None:
+            hi = _residual_literal(col, _coerce_temporal_value(hi, dtype), dtype)
         rows = _zonemap_filter(rows, styp, lo, hi)
         ks = rows.select("part_id", "chunk_seq").distinct()
         keep = ks if keep is None else keep.join(
@@ -1318,6 +1326,10 @@ def _predicate_keepset(
             specs.append((col, "isnull", None, styp))
         else:
             value, probe_val = _normalize_eq_literal(dtype, value)
+            value = _residual_literal(col, value, dtype)
+            if dtype not in ("date", "timestamp_us"):
+                # the bloom hashes the value the residual compares
+                probe_val = value
             rows = _zonemap_filter(rows, styp, lo=value, hi=value)
             rows = _bloom_probe_filter(rows, dtype, probe_val)
             specs.append((col, "eq", value, styp))
@@ -1413,8 +1425,9 @@ def scan_stats(
             pr = _zonemap_filter(rows, styp, lo=value, hi=value)
             kept = _bloom_probe_filter(pr, dtype, probe_val).count()
         out_rows.append((col, "eq", total, kept))
+    # a pandas frame plans as a LocalTableScan: no Python workers
     return spark.createDataFrame(
-        out_rows,
+        pd.DataFrame(out_rows),
         "column string, kind string, chunks_total long, chunks_kept long",
     )
 
@@ -1436,6 +1449,41 @@ def _coerce_temporal_value(value, dtype: str):
             dt = dt.astimezone(_dt.timezone.utc).replace(tzinfo=None)
         return dt
     return value
+
+
+def _residual_literal(column: str, value, dtype: str):
+    """``value`` converted to ``column``'s type as the Spark residual
+    ``F.lit(value).cast(styp)`` converts it: 2.5 truncates to 2 in a
+    bigint column, 5 becomes '5' in a string column, a bigint past
+    2**53 rounds to the nearest double, a decimal rounds half up to
+    the column's scale.  _predicate_keepset converts each literal once,
+    so the Spark residual, the bloom probe and the DML mask all see the
+    same value.  A literal with no such conversion raises a ValueError
+    naming the column, on the driver, before any job starts."""
+    import decimal
+
+    import pyarrow.compute as pc
+
+    typ = arrow_chunk.pa_type_of(dtype)
+    try:
+        if isinstance(value, float) and pa.types.is_integer(typ):
+            # truncates toward zero; the range is still checked
+            return pa.scalar(value, type=typ).as_py()
+        if pa.types.is_decimal(typ) and isinstance(value, (int, float, decimal.Decimal)):
+            step = decimal.Decimal(1).scaleb(-typ.scale)
+            value = decimal.Decimal(str(value)).quantize(step, decimal.ROUND_HALF_UP)
+            return pa.scalar(value, type=typ).as_py()
+        # int -> float may round and decimal -> int truncates, as in
+        # Spark; any other conversion must be exact
+        opts = pc.CastOptions(
+            typ, allow_float_truncate=True, allow_decimal_truncate=True
+        )
+        return pa.scalar(value).cast(options=opts).as_py()
+    except (pa.ArrowException, ArithmeticError, TypeError, ValueError) as e:
+        raise ValueError(
+            f"predicate literal {value!r} cannot be compared with column "
+            f"{column!r} of type {dtype}"
+        ) from e
 
 
 def _match_mask(arrs: dict, specs: list, n: int) -> np.ndarray:
@@ -1464,15 +1512,11 @@ def _match_mask(arrs: dict, specs: list, n: int) -> np.ndarray:
             # high): the previous arr.to_pandas() converted a NULLABLE
             # int64 column to float64, so values > 2^53 compared
             # inexactly and delete_where/update_where mutated
-            # NON-matching rows.  pa.scalar(value, arr.type) keeps the
-            # comparison in the column's exact type, matching Spark's
-            # residual semantics bit for bit.
+            # NON-matching rows.  The literal was converted to the
+            # column's type on the driver (_residual_literal), so the
+            # comparison stays in that exact type, as Spark's does.
             nn = arr.drop_null() if arr.null_count else arr
-            try:
-                scalar = pa.scalar(value, type=nn.type)
-            except (pa.ArrowInvalid, pa.ArrowTypeError):
-                scalar = pa.scalar(value)
-                nn = nn.cast(scalar.type)
+            scalar = pa.scalar(value, type=nn.type)
             if kind == "ge":
                 cmp = pc.greater_equal(nn, scalar)
             elif kind == "le":
@@ -1913,24 +1957,22 @@ def write_encoded(
     metadata: dict[str, str] | None = None,
     partition_by_column: bool = False,
 ) -> None:
-    """Persist blobs + a pure-metadata manifest (lineage) table.
+    """Write an encoded table: ``blobs/`` plus a tiny ``meta/`` KV table.
 
-    The manifest is the footer analogue (/root/reference/lib/writer.js:520-569)
-    but queryable: per-chunk codec, sizes, sha256, timing.  ``metadata``
-    is user key/value footer metadata (``setMetadata``,
-    /root/reference/lib/writer.js:147-149), stored as its own tiny
-    table.
+    One encode job writes ``blobs/`` straight from ``blob_df``, as the
+    reference writer emits page bytes and ColumnMetaData from one pass
+    (reference lib/writer.js:424-477,520-569).  There is no separate
+    manifest table and no persist: the manifest (the footer analogue:
+    per-chunk codec, sizes, sha256, stats, timing) is every
+    ``blobs/`` column but ``data``, read back as a column-pruned
+    projection (``read_manifest``), so it describes the stored bytes by
+    construction and parquet pruning keeps the ``data`` pages unread.
+    A ``manifest/`` directory left by an older writer is ignored.
 
-    The encode runs exactly once per call, as the reference writer
-    emits page bytes and ColumnMetaData from one encode (reference
-    lib/writer.js:424-477): an uncached ``blob_df`` is persisted
-    (default storage level) for the duration of the call, so ``blobs/``
-    and ``manifest/`` are written from one execution and the manifest
-    describes exactly the stored bytes, ``wall_ms`` included.  The
-    trade is memory: the encoded table, about ``size_ratio`` x the
-    content bytes, is held in the block manager until the call
-    returns.  A ``blob_df`` the caller already cached is used as is
-    and stays cached.
+    ``metadata`` is user key/value footer metadata (``setMetadata``,
+    reference lib/writer.js:147-149).  It is built on the driver from a
+    pandas frame (a ``LocalTableScan``, no Python workers) and written
+    as one file in a second, tiny job.
 
     ``partition_by_column=True`` lays the blob table out as one storage
     partition per encoded column.  decode_column/scan_* filter on
@@ -1947,20 +1989,10 @@ def write_encoded(
     kv: dict[str, str] = {}
     if mode == "append":
         kv.update(read_metadata(spark, path))
-    # mapInArrow cannot be pruned: without the persist the manifest
-    # projection re-runs the whole encode
-    owned = blob_df.storageLevel == StorageLevel.NONE
-    if owned:
-        blob_df.persist()
-    try:
-        wr = blob_df.write.mode(mode)
-        if partition_by_column:
-            wr = wr.partitionBy("column")
-        wr.parquet(f"{path}/blobs")
-        blob_df.select(*MANIFEST_COLUMNS).write.mode(mode).parquet(f"{path}/manifest")
-    finally:
-        if owned:
-            blob_df.unpersist()
+    wr = blob_df.write.mode(mode)
+    if partition_by_column:
+        wr = wr.partitionBy("column")
+    wr.parquet(f"{path}/blobs")
     # the manifest on disk just changed — a cached (col_idx, dtype) map
     # for this path is now stale and would silently drive decode with
     # the OLD schema after an overwrite-recast; drop it
@@ -1972,8 +2004,9 @@ def write_encoded(
     kv[_SHA_FORMAT_KEY] = str(SHA_FORMAT_VERSION)
     for k, v in (metadata or {}).items():
         kv[str(k)] = str(v)
+    # a pandas frame plans as a LocalTableScan: no Python workers
     mdf = spark.createDataFrame(
-        list(kv.items()), "key string, value string"
+        pd.DataFrame(list(kv.items())), "key string, value string"
     )
     # KV table itself is always overwrite: a resume (mode="append")
     # must not stack duplicate rows — semantics are last-write-wins
@@ -2013,8 +2046,8 @@ def read_sha_format(spark: SparkSession, path: str) -> int:
 
 def read_encoded(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(f"{path}/blobs")
-    # remember the manifest sibling: scan/decode resolve dtypes from it
-    # with zero probe jobs on the blob table (see _manifest_meta)
+    # remember the table path: scan/decode resolve dtypes from its
+    # manifest columns with zero probe jobs (see _manifest_meta)
     df._pjs_meta_path = path
     return df
 
@@ -2116,7 +2149,11 @@ def rename_column(blob_df: DataFrame, old: str, new: str) -> DataFrame:
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(f"{path}/manifest")
+    """The manifest: every blob-table column but ``data``.  Parquet
+    column pruning leaves the ``data`` pages unread; columns an older
+    writer did not store are left out."""
+    blobs = spark.read.parquet(f"{path}/blobs")
+    return blobs.select(*[c for c in MANIFEST_COLUMNS if c in blobs.columns])
 
 
 def pending_chunks(all_manifest: DataFrame, done_manifest: DataFrame) -> DataFrame:

@@ -2,7 +2,7 @@
 (/root/reference/lib/writer.js:259-288: rows in -> encoded bytes out,
 back-pressure via the stream) re-expressed as Structured Streaming with
 ``foreachBatch``: each micro-batch runs the same vectorized encode stage
-and appends blobs+manifest; checkpointing gives exactly-once appends,
+and appends to the blob table; checkpointing gives exactly-once appends,
 which composes with the manifest anti-join resume (the stream IS the
 checkpointed writer the reference's Transform stream approximates).
 """

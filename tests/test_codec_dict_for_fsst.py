@@ -245,6 +245,34 @@ def test_selector_reuses_empty_fsst_table(monkeypatch):
     assert picks == {"PLAIN"} and len(trains) == 1
 
 
+def test_dict_probe_sample_capped_by_bytes(monkeypatch):
+    """The selector's dictionary-cardinality probe reads the first
+    values holding SAMPLE_BYTES, so at most SAMPLE_BYTES plus one
+    value: a chunk of 1 MB values probes one value, not a floor of
+    many."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from parquetjs_spark import arrow_chunk
+    from parquetjs_spark.chunk import SAMPLE_BYTES
+
+    value_bytes = 1 << 20
+    rng = np.random.default_rng(3)
+    vals = [rng.bytes(value_bytes) for _ in range(8)]
+    block = arrow_chunk._strblock_from_pa(pa.array(vals, pa.binary()))
+
+    probed = []
+    dictionary_encode = pc.dictionary_encode
+
+    def spy(arr, *a, **k):
+        probed.append(pc.sum(pc.binary_length(arr)).as_py())
+        return dictionary_encode(arr, *a, **k)
+
+    monkeypatch.setattr(arrow_chunk.pc, "dictionary_encode", spy)
+    arrow_chunk._select_string_codec(block, None)
+    assert probed and max(probed) <= SAMPLE_BYTES + value_bytes
+
+
 class TestReadOptimizedProfile:
     """VERDICT r6 #3: decode-cost-aware selection.  The default profile
     selects by measured size alone (unchanged behavior); the

@@ -93,6 +93,18 @@ def test_simhash_identical_and_near(spark):
     assert fp[3] == 0 and fp[4] == 0
 
 
+def test_list_i64_parts_null_rows_have_length_zero():
+    """A null list<int64> row owns no values: its length is 0, never
+    the int64 cast of a NaN length."""
+    import pyarrow as pa
+
+    col = pa.array([[1, 2], None, [3]], pa.list_(pa.int64()))
+    lens, flat = dedup._list_i64_parts(col)
+    assert lens.tolist() == [2, 0, 1]
+    assert flat.tolist() == [1, 2, 3]
+    assert lens.sum() == len(flat)
+
+
 def test_no_per_value_python_hash_left():
     """The north rule bans per-row Python in hot paths; the old _fnv1a
     byte loop must stay gone."""

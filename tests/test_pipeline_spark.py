@@ -548,10 +548,10 @@ def test_write_encoded_partitioned_by_column(spark, tmp_path):
 def test_write_encoded_manifest_matches_blobs(
     spark, tmp_path, partition_by_column, cached
 ):
-    """One encode per write: the manifest describes exactly the stored
-    blobs, down to each chunk's own encode timing (``wall_ms``).  The
-    input's cache state is the caller's: uncached stays uncached,
-    cached stays cached."""
+    """The manifest is a projection of the stored blobs, so it
+    describes them exactly, down to each chunk's own encode timing
+    (``wall_ms``).  The input's cache state is the caller's: uncached
+    stays uncached, cached stays cached."""
     df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
     blobs = pipeline.encode_columns(df, chunk_rows=512)
     if cached:
@@ -568,6 +568,131 @@ def test_write_encoded_manifest_matches_blobs(
     assert manifest.count() > 2
     assert manifest.exceptAll(stored).count() == 0
     assert stored.exceptAll(manifest).count() == 0
+
+
+def test_write_encoded_runs_two_jobs(spark, tmp_path):
+    """An uncached encode is written by exactly two jobs: the one
+    encode-and-write of ``blobs/`` and the tiny ``meta/`` write."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    blobs = pipeline.encode_columns(df, chunk_rows=512)
+    sc = spark.sparkContext
+    sc.setJobGroup("write_encoded_jobs", "count the jobs of one write")
+    try:
+        pipeline.write_encoded(blobs, str(tmp_path / "enc"))
+        jobs = sc.statusTracker().getJobIdsForGroup("write_encoded_jobs")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 2, sorted(jobs)
+
+
+@pytest.mark.parametrize(
+    "manifest_dir,partition_by_column", [("deleted", False), ("stale", True)]
+)
+def test_leftover_manifest_dir_is_ignored(
+    spark, tmp_path, capsys, manifest_dir, partition_by_column
+):
+    """The manifest is read from ``blobs/``: a ``manifest/`` directory
+    that is missing, or stale (a subset of the chunks, as an older
+    writer could leave it after a cut resume), changes nothing.  The
+    driver-side dtype map reads ``blobs/`` too, with no Spark job, also
+    when ``column`` lives in the partition directory names."""
+    import shutil
+
+    from parquetjs_spark import cli
+
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    ref, out = str(tmp_path / "ref"), str(tmp_path / "enc")
+    pipeline.write_encoded(
+        pipeline.encode_columns(df, chunk_rows=512), ref,
+        partition_by_column=partition_by_column,
+    )
+    shutil.copytree(ref, out)
+    if manifest_dir == "stale":
+        (
+            spark.read.parquet(f"{out}/blobs")
+            .where(F.col("column") == "l_orderkey")
+            .select(*pipeline.MANIFEST_COLUMNS)
+            .limit(2)
+            .write.mode("overwrite")
+            .parquet(f"{out}/manifest")
+        )
+    else:
+        shutil.rmtree(f"{out}/manifest", ignore_errors=True)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest_meta", "the dtype map must run no job")
+    try:
+        meta = pipeline._manifest_meta(spark, out)
+        assert list(sc.statusTracker().getJobIdsForGroup("manifest_meta")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert meta == {"l_orderkey": (0, "int64"), "l_returnflag": (1, "string")}
+
+    manifest = pipeline.read_manifest(spark, out)
+    stored = pipeline.read_encoded(spark, ref).select(*pipeline.MANIFEST_COLUMNS)
+    assert manifest.count() == stored.count() > 2
+    assert manifest.exceptAll(stored).count() == 0
+    assert stored.exceptAll(manifest).count() == 0
+
+    for col in df.columns:
+        got = pipeline.decode_column(pipeline.read_encoded(spark, out), col)
+        want = df.select(col)
+        assert got.exceptAll(want).count() == 0 == want.exceptAll(got).count()
+
+    def stats(path):
+        capsys.readouterr()
+        argv = ["stats", "--input", path, "--range", "l_orderkey:1..500",
+                "--eq", "l_returnflag=R"]
+        assert cli.main(argv) == 0
+        return sorted(capsys.readouterr().out.strip().splitlines())
+
+    assert stats(out) == stats(ref)
+
+
+def test_manifest_meta_keeps_integer_like_names_as_strings(spark, tmp_path):
+    """Partition directories ``column=2024`` must not make the
+    driver-side dtype map key its columns by int."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "`2024` long, `7` string")
+    out = str(tmp_path / "enc")
+    pipeline.write_encoded(
+        pipeline.encode_columns(df, chunk_rows=16), out, partition_by_column=True
+    )
+    meta = pipeline._manifest_meta(spark, out)
+    assert meta == {"2024": (0, "int64"), "7": (1, "string")}
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_built_frames_are_local(spark, tmp_path, monkeypatch):
+    """The driver-built DataFrames (the ``meta/`` KV rows and the
+    ``scan_stats`` report) plan as a ``LocalTableScan``: no RDD scan,
+    so no Python workers start."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = {}
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **k):
+        if path.endswith("/meta"):
+            plans["meta"] = _executed_plan(self._df)
+        return parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    out = str(tmp_path / "enc")
+    pipeline.write_encoded(
+        pipeline.encode_columns(df, chunk_rows=512), out, metadata={"k": "v"}
+    )
+    blobs = pipeline.read_encoded(spark, out)
+    plans["scan_stats"] = _executed_plan(
+        pipeline.scan_stats(blobs, ranges={"l_orderkey": (1, 500)})
+    )
+    assert set(plans) == {"meta", "scan_stats"}
+    for name, plan in plans.items():
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "ExistingRDD" not in plan, (name, plan)
 
 
 def test_time_roundtrip_spark(spark):
