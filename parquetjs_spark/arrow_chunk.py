@@ -1,16 +1,19 @@
-"""Arrow-native column-chunk encode/decode.
+"""The column-chunk API: encode, decode and verify one Arrow column
+chunk in the wire format whose layout and constants live in chunk.py.
 
-Same wire format as chunk.py (the pandas path) — blobs are
-interchangeable — but values never round-trip through Python objects:
-string columns are consumed as their Arrow buffers (one contiguous data
-buffer + an offsets vector), numeric columns as zero-copy NumPy views.
-This is the hot path behind ``pipeline.encode_columns`` /
-``decode_column`` (``df.mapInArrow``): the Arrow->pandas conversion of a
-string column materializes one PyObject per value, which costs more than
-the encoding itself and wrecks multi-worker scaling via allocator
-pressure; reading the buffers directly removes that entirely.
+This module owns blob assembly and header parsing, the byte-array
+codecs and their selector, and the canonical sha256; chunk.py supplies
+the numeric value codecs and the numeric selector.  Values never
+round-trip through Python objects: string columns are consumed as their
+Arrow buffers (one contiguous data buffer + an offsets vector), numeric
+columns as zero-copy NumPy views.  This is the path behind
+``pipeline.encode_columns`` / ``decode_column`` (``df.mapInArrow``): the
+Arrow->pandas conversion of a string column materializes one PyObject
+per value, which costs more than the encoding itself and wrecks
+multi-worker scaling via allocator pressure.
 
-Citations: same operator semantics as chunk.py
+Citations: the analogue of the reference's encodeColumnChunk /
+readColumnChunk
 (/root/reference/lib/writer.js:424-477 encodeColumnChunk,
 /root/reference/lib/reader.js:237-262 readColumnChunk, DataPageV2 layout
 /root/reference/lib/writer.js:355-419).
@@ -31,9 +34,12 @@ from .chunk import (
     PROBE_TRAIN_BYTES,
     SAMPLE_BYTES,
     SAMPLE_VALUES,
-    SEL_CACHE_USES,
     _PTYPE,
+    _decode_values,
+    _encode_values,
     dtype_id,
+    select_cached,
+    select_codec,
 )
 from .codecs import (
     CODEC_IDS,
@@ -46,6 +52,7 @@ from .codecs import (
     RLE,
     bloom as bloomlib,
     compress as comp,
+    dictionary,
     for_bp,
     fsst,
     incr as incrlib,
@@ -279,37 +286,72 @@ def _decode_incr_block(buf: memoryview, n: int) -> StrBlock:
     return StrBlock(payload, offsets)
 
 
+def _encode_string_block(block: StrBlock, codec: str, fsst_state: dict | None) -> bytes:
+    """Byte-array value section under ``codec`` (scalar columns and
+    list elements alike)."""
+    if codec == PLAIN:
+        return _str_stream(block)
+    if codec == FLBA:
+        return _encode_flba_block(block)
+    if codec == DICT_RLE:
+        return _encode_dict_block(block)
+    if codec == FSST:
+        return _encode_fsst_block(block, fsst_state)
+    if codec == INCR:
+        return _encode_incr_block(block)
+    raise ValueError(f"codec {codec} unsupported for byte arrays")
+
+
+def _decode_string_block(values_raw, nn: int, codec: str) -> StrBlock:
+    mv = memoryview(values_raw)
+    if codec == PLAIN:
+        return _str_stream_decode(mv, nn)
+    if codec == FLBA:
+        return _decode_flba_block(mv, nn)
+    if codec == DICT_RLE:
+        return _decode_dict_block(mv, nn)
+    if codec == FSST:
+        return _decode_fsst_block(mv, nn)
+    if codec == INCR:
+        return _decode_incr_block(mv, nn)
+    raise ValueError(f"codec {codec} unsupported for byte arrays")
+
+
 # --------------------------------------------------------------------------
-# selector over StrBlock (same policy as chunk.select_codec)
+# byte-array codec selector over StrBlock
 # --------------------------------------------------------------------------
 
 
 def _select_string_codec(
     block: StrBlock, fsst_state: dict | None, profile: str = "default"
 ) -> tuple[str, dict]:
+    """Return (codec_name, selector_stats) for a byte-array chunk.
+    ``fsst_state`` is the per-task, per-column cache: it holds the
+    decision (chunk.select_cached) and a trained FSST symbol table,
+    reused for sizing and encoding instead of retraining per chunk."""
     n = block.n
-    info: dict = {}
     if n == 0:
-        return PLAIN, info
-    # decision cache: one column's chunks within a task are near-i.i.d.,
-    # so re-measuring plain-vs-fsst on every chunk wastes ~15% of encode
-    # CPU; re-evaluate every SEL_CACHE_USES chunks to bound drift.  A
-    # cached FLBA pick requires uniform widths in THIS chunk too —
-    # re-validate before reuse (one variable-length value would crash
-    # the encode otherwise).
-    if fsst_state is not None and "sel" in fsst_state:
-        sel = fsst_state["sel"]
-        ok = fsst_state.get("sel_uses", 0) < SEL_CACHE_USES
-        if ok and sel == FLBA and n:
-            ls = block.lens
-            ok = bool((ls == ls[0]).all())
-        if ok:
-            fsst_state["sel_uses"] = fsst_state.get("sel_uses", 0) + 1
-            return sel, {"cached": True}
-        del fsst_state["sel"]
-    total = block.total
+        return PLAIN, {}
     lens = block.lens
-    uniform = bool(n) and bool((lens == lens[0]).all())
+    uniform = bool((lens == lens[0]).all())
+    # a cached FLBA pick requires uniform widths in THIS chunk too
+    return select_cached(
+        fsst_state,
+        lambda sel: sel != FLBA or uniform,
+        lambda: _string_candidates(block, uniform, fsst_state),
+        block.total,
+        profile,
+    )
+
+
+def _string_candidates(
+    block: StrBlock, uniform: bool, fsst_state: dict | None
+) -> tuple[dict, dict]:
+    """Measured post-compression candidate sizes of a non-empty
+    byte-array chunk -> (sizes, selector info)."""
+    n = block.n
+    total = block.total
+    info: dict = {}
     # sample bounded by VALUES and BYTES: a 4096-value sample of long
     # documents is MBs, and the pc.dictionary_encode cardinality probe
     # over it costs more than the chunk encode itself (the FSST/INCR
@@ -330,13 +372,9 @@ def _select_string_codec(
     codes = denc.indices.to_numpy(zero_copy_only=False)
     runs = 1 + int(np.count_nonzero(np.diff(codes))) if len(codes) else 0
     dict_bytes = _strblock_from_pa(denc.dictionary).total + card
-    width = bit_width(max(0, card - 1))
-    # same RLE-hybrid estimate as dictionary.stats: better of bit-packed
-    # groups vs repeated runs
-    est_idx = min(
-        (len(codes) * width + 7) // 8 + 2 * (len(codes) // 504 + 1),
-        runs * (2 + (width + 7) // 8),
-    ) + 2
+    est_idx = dictionary.index_size_estimate(
+        len(codes), bit_width(max(0, card - 1)), runs
+    )
     scale = n / sample.n
     cands = {
         PLAIN: total + n,
@@ -402,19 +440,13 @@ def _select_string_codec(
                 if len(concat_p):
                     pz = comp.size_estimate(concat_p) / len(concat_p)
                     cands[PLAIN] = int(pz * total) + n
-                    plain_post_z = True
             info["mean_lcp"] = round(probe, 1)
             cands[INCR] = int(incr_z * total) + n
             if cands[INCR] > 0.92 * cands[PLAIN]:
                 cands.pop(INCR)
     info.update(cardinality=card, runs=runs, sizes=cands)
-    from .chunk import _pick
+    return cands, info
 
-    choice = _pick(cands, total, profile)
-    if fsst_state is not None:
-        fsst_state["sel"] = choice
-        fsst_state["sel_uses"] = 0
-    return choice, info
 
 
 # --------------------------------------------------------------------------
@@ -526,7 +558,7 @@ def _values_to_arrow(values, valid: np.ndarray, dtype: str) -> pa.Array:
 
 
 # --------------------------------------------------------------------------
-# canonical sha256 — identical definition to chunk.canonical_sha256
+# canonical sha256 (format 2) — the per-row bit-identity invariant
 # --------------------------------------------------------------------------
 
 
@@ -540,21 +572,27 @@ def _sha_update_strings(h, block: StrBlock) -> None:
     h.update(np.ascontiguousarray(block.lens, dtype="<i8").tobytes())
 
 
-def _canonical_sha256_block(values, valid: np.ndarray, dtype: str) -> str:
-    h = hashlib.sha256()
+def _sha_update_values(h, values, dtype: str) -> None:
+    """Non-null values: the string feed above, or the PLAIN LE bytes."""
     if dtype in ("string", "binary"):
         _sha_update_strings(h, values)
     elif dtype == "bool":
         h.update(plain.encode_boolean(np.asarray(values)))
     else:
         h.update(plain.encode_numeric(_PTYPE[dtype], np.asarray(values)))
+
+
+def _canonical_sha256_block(values, valid: np.ndarray, dtype: str) -> str:
+    """sha256 over the non-null values ++ '|' ++ validity bitmap."""
+    h = hashlib.sha256()
+    _sha_update_values(h, values, dtype)
     h.update(b"|")
     h.update(np.packbits(valid.view(np.uint8), bitorder="little").tobytes())
     return h.hexdigest()
 
 
 # --------------------------------------------------------------------------
-# public: encode/decode one arrow column chunk (wire-compatible w/ chunk.py)
+# public: encode/decode one arrow column chunk
 # --------------------------------------------------------------------------
 
 
@@ -604,12 +642,7 @@ def _canonical_sha256_list(
     lens: np.ndarray, elem_values, elem_valid: np.ndarray, valid, elem_dtype
 ) -> str:
     h = hashlib.sha256()
-    if elem_dtype in ("string", "binary"):
-        _sha_update_strings(h, elem_values)
-    elif elem_dtype == "bool":
-        h.update(plain.encode_boolean(np.asarray(elem_values)))
-    else:
-        h.update(plain.encode_numeric(_PTYPE[elem_dtype], np.asarray(elem_values)))
+    _sha_update_values(h, elem_values, elem_dtype)
     h.update(b"|")
     h.update(lens.astype("<i8").tobytes())
     h.update(b"|")
@@ -700,39 +733,19 @@ def _encode_list_column(
         return _encode_nested_list_column(arr, dtype, codec, fsst_state, profile)
     lens, elem_values, elem_valid, valid, elem_dtype = _list_parts(arr, dtype)
     sel_info: dict = {}
-    if elem_dtype == "bool":
-        from . import chunk as chunklib
-
-        codec = PLAIN if codec == "auto" else codec
-        elem_raw = chunklib._encode_values(
-            np.asarray(elem_values), "bool", codec, None, fsst_state
-        )
-        content = (len(elem_values) + 7) // 8
-    elif elem_dtype in ("string", "binary"):
+    if elem_dtype in ("string", "binary"):
         if codec == "auto":
             codec, sel_info = _select_string_codec(elem_values, fsst_state, profile)
-        if codec == PLAIN:
-            elem_raw = _str_stream(elem_values)
-        elif codec == FLBA:
-            elem_raw = _encode_flba_block(elem_values)
-        elif codec == DICT_RLE:
-            elem_raw = _encode_dict_block(elem_values)
-        elif codec == FSST:
-            elem_raw = _encode_fsst_block(elem_values, fsst_state)
-        elif codec == INCR:
-            elem_raw = _encode_incr_block(elem_values)
-        else:
-            raise ValueError(f"codec {codec} unsupported for {dtype}")
+        elem_raw = _encode_string_block(elem_values, codec, fsst_state)
         content = elem_values.total
     else:
-        from . import chunk as chunklib
-
         if codec == "auto":
-            codec, sel_info = chunklib.select_codec(
-                elem_values, elem_dtype, fsst_state, profile
-            )
-        elem_raw = chunklib._encode_values(elem_values, elem_dtype, codec, None, fsst_state)
-        content = int(np.asarray(elem_values).nbytes)
+            codec, sel_info = select_codec(elem_values, elem_dtype, fsst_state, profile)
+        elem_raw = _encode_values(elem_values, elem_dtype, codec)
+        content = (
+            (len(elem_values) + 7) // 8 if elem_dtype == "bool"
+            else int(np.asarray(elem_values).nbytes)
+        )
     lens_enc = for_bp.encode(lens)
     if elem_valid.all():
         ev_enc = b""
@@ -768,24 +781,10 @@ def _decode_list_column(
     n_vals = int(elem_valid.sum())
     elem_dtype = dtype[len("list_") :]
     if elem_dtype in ("string", "binary"):
-        if codec == PLAIN:
-            elems = _str_stream_decode(elem_mv, n_vals)
-        elif codec == FLBA:
-            elems = _decode_flba_block(elem_mv, n_vals)
-        elif codec == DICT_RLE:
-            elems = _decode_dict_block(elem_mv, n_vals)
-        elif codec == FSST:
-            elems = _decode_fsst_block(elem_mv, n_vals)
-        elif codec == INCR:
-            elems = _decode_incr_block(elem_mv, n_vals)
-        else:
-            raise ValueError(f"codec {codec} unsupported for {dtype}")
-        child = _values_to_arrow(elems, elem_valid, elem_dtype)
+        elems = _decode_string_block(elem_mv, n_vals, codec)
     else:
-        from . import chunk as chunklib
-
-        vals = chunklib._decode_values(elem_mv, n_vals, elem_dtype, codec)
-        child = _values_to_arrow(np.asarray(vals), elem_valid, elem_dtype)
+        elems = _decode_values(elem_mv, n_vals, elem_dtype, codec)
+    child = _values_to_arrow(elems, elem_valid, elem_dtype)
     if int(lens.sum()) >= 2**31:
         # int32 ListArray offsets would silently wrap (unreachable at the
         # default 4096-row chunking; guards callers passing huge
@@ -841,16 +840,14 @@ def _decimal_to_arrow(vals: np.ndarray, valid: np.ndarray, p: int, sc: int) -> p
 def _encode_decimal_column(
     arr, dtype, codec, compression, fsst_state, profile="default"
 ):
-    from . import chunk as chunklib
-
     p, sc = (int(x) for x in dtype[len("decimal(") : -1].split(","))
     vals, valid = _decimal_parts(arr)
     n = len(valid)
     n_nulls = int(n - valid.sum())
     sel_info: dict = {}
     if codec == "auto":
-        codec, sel_info = chunklib.select_codec(vals, "int64", fsst_state, profile)
-    payload = chunklib._encode_values(vals, "int64", codec, None, fsst_state)
+        codec, sel_info = select_codec(vals, "int64", fsst_state, profile)
+    payload = _encode_values(vals, "int64", codec)
     values_raw = bytes([p, sc]) + payload
     return _assemble_blob(
         dtype, codec, compression, n, n_nulls, valid, values_raw,
@@ -944,27 +941,12 @@ def encode_arrow_column(
     if dtype in ("string", "binary"):
         if codec == "auto":
             codec, sel_info = _select_string_codec(values, fsst_state, profile)
-        if codec == PLAIN:
-            values_raw = _str_stream(values)
-        elif codec == FLBA:
-            values_raw = _encode_flba_block(values)
-        elif codec == DICT_RLE:
-            values_raw = _encode_dict_block(values)
-        elif codec == FSST:
-            values_raw = _encode_fsst_block(values, fsst_state)
-        elif codec == INCR:
-            values_raw = _encode_incr_block(values)
-        else:
-            raise ValueError(f"codec {codec} unsupported for {dtype}")
+        values_raw = _encode_string_block(values, codec, fsst_state)
         content_bytes = values.total
     else:
-        from . import chunk as chunklib
-
         if codec == "auto":
-            codec, sel_info = chunklib.select_codec(
-                values, dtype, fsst_state, profile
-            )
-        values_raw = chunklib._encode_values(values, dtype, codec, None, fsst_state)
+            codec, sel_info = select_codec(values, dtype, fsst_state, profile)
+        values_raw = _encode_values(values, dtype, codec)
         content_bytes = (
             (len(values) + 7) // 8 if dtype == "bool" else int(np.asarray(values).nbytes)
         )
@@ -1017,12 +999,22 @@ def _assemble_blob(
     return blob, stats
 
 
+_HEADER_LEN = 24
+
 
 def _parse_blob(blob: bytes | memoryview):
-    """Shared header parse: -> (dtype, codec, valid, values_raw, nn)."""
+    """Shared header parse: -> (dtype, codec, valid, values_raw, nn).
+    Every header field is checked against the blob before anything is
+    decoded or decompressed; a bad one raises ValueError naming it."""
     mv = memoryview(blob)
+    if len(mv) < _HEADER_LEN:
+        raise ValueError(f"chunk blob of {len(mv)} bytes is shorter than its header")
     if bytes(mv[:4]) != MAGIC:
         raise ValueError("bad chunk magic")
+    if mv[4] not in DTYPE_NAMES:
+        raise ValueError(f"unknown dtype id {mv[4]} (header byte 4)")
+    if mv[5] not in CODEC_NAMES:
+        raise ValueError(f"unknown codec id {mv[5]} (header byte 5)")
     dtype = DTYPE_NAMES[mv[4]]
     codec = CODEC_NAMES[mv[5]]
     compression = comp.comp_name(mv[6])
@@ -1031,7 +1023,18 @@ def _parse_blob(blob: bytes | memoryview):
     n_nulls = int.from_bytes(bytes(mv[12:16]), "little")
     levels_len = int.from_bytes(bytes(mv[16:20]), "little")
     values_len = int.from_bytes(bytes(mv[20:24]), "little")
-    pos = 24
+    if n_nulls > n:
+        raise ValueError(f"n_nulls {n_nulls} exceeds n_values {n}")
+    pos = _HEADER_LEN
+    if pos + levels_len > len(mv):
+        raise ValueError(
+            f"levels_len {levels_len} runs past the {len(mv)}-byte blob"
+        )
+    if pos + levels_len + values_len != len(mv):
+        raise ValueError(
+            f"values_len {values_len} does not end the {len(mv)}-byte blob "
+            f"(levels_len {levels_len})"
+        )
     if flags & 1:
         valid = rle.decode(mv[pos : pos + levels_len], n, 1, disable_envelope=True).astype(bool)
     else:
@@ -1043,27 +1046,11 @@ def _parse_blob(blob: bytes | memoryview):
     return dtype, codec, valid, values_raw, n - n_nulls
 
 
-def _decode_string_block(values_raw, nn: int, codec: str, dtype: str) -> StrBlock:
-    if codec == PLAIN:
-        return _str_stream_decode(memoryview(values_raw), nn)
-    if codec == FLBA:
-        return _decode_flba_block(memoryview(values_raw), nn)
-    if codec == DICT_RLE:
-        return _decode_dict_block(memoryview(values_raw), nn)
-    if codec == FSST:
-        return _decode_fsst_block(memoryview(values_raw), nn)
-    if codec == INCR:
-        return _decode_incr_block(memoryview(values_raw), nn)
-    raise ValueError(f"codec {codec} unsupported for {dtype}")
-
-
 def decode_arrow_column(blob: bytes | memoryview) -> tuple[pa.Array, str]:
     dtype, codec, valid, values_raw, nn = _parse_blob(blob)
     if dtype == "decimal":
-        from . import chunk as chunklib
-
         p, sc = values_raw[0], values_raw[1]
-        vals = chunklib._decode_values(memoryview(values_raw)[2:], nn, "int64", codec)
+        vals = _decode_values(memoryview(values_raw)[2:], nn, "int64", codec)
         return (
             _decimal_to_arrow(np.asarray(vals, dtype=np.int64), valid, p, sc),
             f"decimal({p},{sc})",
@@ -1073,11 +1060,9 @@ def decode_arrow_column(blob: bytes | memoryview) -> tuple[pa.Array, str]:
     if dtype.startswith("list_"):
         return _decode_list_column(values_raw, nn, dtype, codec, valid), dtype
     if dtype in ("string", "binary"):
-        block = _decode_string_block(values_raw, nn, codec, dtype)
+        block = _decode_string_block(values_raw, nn, codec)
         return _values_to_arrow(block, valid, dtype), dtype
-    from . import chunk as chunklib
-
-    vals = chunklib._decode_values(memoryview(values_raw), nn, dtype, codec)
+    vals = _decode_values(memoryview(values_raw), nn, dtype, codec)
     return _values_to_arrow(vals, valid, dtype), dtype
 
 
@@ -1116,13 +1101,9 @@ def verify_arrow(blob: bytes, expected_sha: str) -> bool:
             arr, full_dtype = decode_arrow_column(blob)
             return arrow_canonical_sha(arr, full_dtype) == expected_sha
         if dtype in ("string", "binary"):
-            values = _decode_string_block(values_raw, nn, codec, dtype)
+            values = _decode_string_block(values_raw, nn, codec)
         else:
-            from . import chunk as chunklib
-
-            values = chunklib._decode_values(
-                memoryview(values_raw), nn, dtype, codec
-            )
+            values = _decode_values(memoryview(values_raw), nn, dtype, codec)
         return _canonical_sha256_block(values, valid, dtype) == expected_sha
     except Exception:
         return False

@@ -141,4 +141,6 @@ def comp_id(name: str) -> int:
 
 
 def comp_name(cid: int) -> str:
+    if cid not in _NAMES:
+        raise ValueError(f"unknown compression id {cid}")
     return _NAMES[cid]

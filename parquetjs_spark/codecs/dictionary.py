@@ -68,29 +68,30 @@ def decode(buf: bytes | memoryview, count: int, ptype: str):
     return uniques[idx.astype(np.int64)]
 
 
-def stats(values, ptype: str) -> dict:
-    """Cardinality / run statistics for the auto-selector."""
-    if ptype == "BYTE_ARRAY":
-        arr = np.empty(len(values), dtype=object)
-        arr[:] = values
-        codes, uniques = pd.factorize(arr, use_na_sentinel=False)
-        dict_bytes = sum(1 + len(u) for u in uniques)
-    else:
-        v = np.asarray(values)
-        codes, uniques = pd.factorize(v, use_na_sentinel=False)
-        dict_bytes = len(uniques) * v.dtype.itemsize
+def index_size_estimate(n: int, width: int, runs: int) -> int:
+    """Size of n dictionary indices of ``width`` bits under the RLE
+    hybrid (plus its one-byte width prefix and slack), better of its two
+    run kinds: bit-packed groups (one varint header per <=504 values)
+    for alternating data, repeated runs (header + value) for runny
+    data."""
+    bitpack = (n * width + 7) // 8 + 2 * (n // 504 + 1)
+    repeat = runs * (2 + (width + 7) // 8)
+    return min(bitpack, repeat) + 2
+
+
+def stats(values) -> dict:
+    """Cardinality / run statistics of a numeric sample for the
+    auto-selector (byte arrays are sized in
+    arrow_chunk._select_string_codec)."""
+    v = np.asarray(values)
+    codes, uniques = pd.factorize(v, use_na_sentinel=False)
+    dict_bytes = len(uniques) * v.dtype.itemsize
     n = len(codes)
     runs = 1 + int(np.count_nonzero(np.diff(codes))) if n else 0
     width = bit_width(max(0, len(uniques) - 1))
-    # RLE hybrid size estimate, better of its two run kinds: bit-packed
-    # groups (one varint header per <=504 values) for alternating data,
-    # repeated runs (header + value) for runny data
-    bitpack = (n * width + 7) // 8 + 2 * (n // 504 + 1)
-    repeat = runs * (2 + (width + 7) // 8)
-    est_idx = min(bitpack, repeat) + 2
     return {
         "cardinality": len(uniques),
         "runs": runs,
         "bit_width": width,
-        "est_size": 9 + dict_bytes + est_idx,
+        "est_size": 9 + dict_bytes + index_size_estimate(n, width, runs),
     }

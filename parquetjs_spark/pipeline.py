@@ -512,32 +512,6 @@ _LOGICAL_TO_PA: dict[str, pa.DataType] = {
 # --------------------------------------------------------------------------
 
 
-def _batch_slices(
-    batches: Iterable[pd.DataFrame], chunk_rows: int
-) -> Iterator[pd.DataFrame]:
-    """Re-chunk a stream of pandas batches into ~chunk_rows slices without
-    concatenating the whole partition (bounded memory at any scale)."""
-    pending: list[pd.DataFrame] = []
-    pending_rows = 0
-    for pdf in batches:
-        pos = 0
-        n = len(pdf)
-        while pos < n:
-            take = min(chunk_rows - pending_rows, n - pos)
-            pending.append(pdf.iloc[pos : pos + take])
-            pending_rows += take
-            pos += take
-            if pending_rows >= chunk_rows:
-                yield pd.concat(pending, ignore_index=True) if len(
-                    pending
-                ) > 1 else pending[0].reset_index(drop=True)
-                pending, pending_rows = [], 0
-    if pending_rows:
-        yield pd.concat(pending, ignore_index=True) if len(pending) > 1 else pending[
-            0
-        ].reset_index(drop=True)
-
-
 def _arrow_batch_slices(
     batches: Iterable[pa.RecordBatch], chunk_rows: int
 ) -> Iterator[pa.RecordBatch]:

@@ -49,7 +49,13 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too: point them at this
+# checkout, not whichever one is installed or first on their path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 # --pair=a|b|both (default both): a single-pair re-draw costs half a
 # full invocation; single-pair runs print JSON only and do NOT rewrite
@@ -84,7 +90,6 @@ PARTITIONS = 256  # 8 task waves at 32 cores: stragglers amortize at all sizes
 
 RUNNER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 import pandas as pd
 from pyspark.sql import functions as F
 from parquetjs_spark.sources.tables import get_spark
@@ -242,7 +247,8 @@ def main():
         print("single-pair draw: BENCH/BASELINE.md NOT rewritten")
         return
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    bench_dir = os.path.join(ROOT, "BENCH")
+    os.makedirs(bench_dir, exist_ok=True)
     # preserve hand-written run notes (draw discards, attributions)
     # appended after the marker — regenerating the tables must not
     # destroy the measurement-hygiene history
@@ -252,12 +258,12 @@ def main():
     )
     manual_tail = ""
     try:
-        old = open("/root/repo/BENCH/BASELINE.md").read()
+        old = open(os.path.join(bench_dir, "BASELINE.md")).read()
         if marker in old:
             manual_tail = "\n" + marker + old.split(marker, 1)[1]
     except FileNotFoundError:
         pass
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(os.path.join(bench_dir, "BASELINE.md"), "w") as f:
         f.write(
             f"""# BENCH/BASELINE — two-cluster-size scaling evidence
 
@@ -314,7 +320,7 @@ LLC/memory-bandwidth sharing across all 32 cores of this single NUMA
 box.  Kernel-isolation side measurements attributing this ceiling to
 the box rather than the pipeline (bare-FSST multiprocessing vs a
 zlib-dominant mix through the same pipeline) are maintained in
-/root/repo/BASELINE.md with their own run dates — they are one-off
+BASELINE.md at the repo root with their own run dates — they are one-off
 measurements, deliberately not reprinted by this generator.  Four real
 8-core executor nodes do not share one LLC or one memory controller,
 so pair B is a lower bound on real-cluster scaling; pair A, where both
@@ -325,7 +331,7 @@ Total sha mismatches across all four runs: {a['sha_mismatches'] + b['sha_mismatc
 """
             + manual_tail
         )
-    print("wrote /root/repo/BENCH/BASELINE.md")
+    print(f"wrote {os.path.join(bench_dir, 'BASELINE.md')}")
 
 
 if __name__ == "__main__":

@@ -1,12 +1,13 @@
-"""Arrow-native chunk path: round-trips + wire compatibility with the
-pandas path (identical blob format, interchangeable decode)."""
+"""Chunk API round-trips (encode_arrow_column / decode_arrow_column /
+verify_arrow) per dtype, edge layouts and zone-map stats.  The wire
+itself is pinned in test_wire_golden."""
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
 
-from parquetjs_spark import arrow_chunk, chunk
+from parquetjs_spark import arrow_chunk
 from parquetjs_spark.codecs import DICT_RLE, FSST, PLAIN
 
 
@@ -69,32 +70,6 @@ def test_int_with_nulls():
     out, stats = rt(vals, "int64")
     assert stats["n_nulls"] == 2
     assert out.to_pylist() == vals.to_pylist()
-
-
-def test_wire_compat_pandas_encodes_arrow_decodes():
-    s = pd.Series(["x%d" % (i % 7) for i in range(1000)])
-    blob, stats = chunk.encode_chunk(s, "string")
-    arr, dtype = arrow_chunk.decode_arrow_column(blob)
-    assert dtype == "string"
-    assert arr.to_pylist() == s.tolist()
-    assert arrow_chunk.verify_arrow(blob, stats["sha256"])
-
-
-def test_wire_compat_arrow_encodes_pandas_decodes():
-    vals = ["row %d payload" % i for i in range(1000)]
-    blob, stats = arrow_chunk.encode_arrow_column(pa.array(vals), "string", codec=FSST)
-    series, dtype = chunk.decode_chunk(blob)
-    assert dtype == "string"
-    assert series.tolist() == vals
-    assert chunk.verify_chunk(blob, stats["sha256"])
-
-
-def test_sha_identical_across_paths():
-    vals = ["abc", None, "def"] * 20
-    s = pd.Series(vals, dtype=object)
-    _, st_pd = chunk.encode_chunk(s, "string", codec=PLAIN)
-    _, st_ar = arrow_chunk.encode_arrow_column(pa.array(vals), "string", codec=PLAIN)
-    assert st_pd["sha256"] == st_ar["sha256"]
 
 
 def test_sliced_arrow_input():
@@ -170,29 +145,11 @@ def test_time_ns_roundtrip():
     assert dtype == "time_ns"
     assert out.to_pylist() == vals.to_pylist()
     assert arrow_chunk.verify_arrow(blob, stats["sha256"])
-    # pandas convenience path agrees
-    import pandas as pd
-
-    s = pd.Series([dt.time(1, 2, 3, 4), None, dt.time(23, 0)], dtype=object)
-    blob2, st2 = chunk.encode_chunk(s, "time_ns")
-    out2, dt2 = chunk.decode_chunk(blob2)
-    assert dt2 == "time_ns"
-    assert out2.tolist() == [dt.time(1, 2, 3, 4), None, dt.time(23, 0)]
-    assert chunk.verify_chunk(blob2, st2["sha256"])
-
-
-def test_time_ns_pandas_path_refuses_sub_microsecond():
-    """datetime.time carries micros only — the pandas decode path must
-    refuse (not silently truncate) genuine nanosecond values; the arrow
-    path preserves them."""
-    vals = pa.array(
-        np.array([12_345_678_901], dtype=np.int64), type=pa.time64("ns")
-    )
-    blob, _ = arrow_chunk.encode_arrow_column(vals, "time_ns")
-    out, _ = arrow_chunk.decode_arrow_column(blob)  # arrow path: exact
-    assert out.cast(pa.int64()).to_pylist() == [12_345_678_901]
-    with pytest.raises(ValueError, match="sub-microsecond"):
-        chunk.decode_chunk(blob)
+    # sub-microsecond nanos survive exactly
+    nanos = pa.array(np.array([12_345_678_901], dtype=np.int64), type=pa.time64("ns"))
+    blob2, _ = arrow_chunk.encode_arrow_column(nanos, "time_ns")
+    out2, _ = arrow_chunk.decode_arrow_column(blob2)
+    assert out2.cast(pa.int64()).to_pylist() == [12_345_678_901]
 
 
 def test_int64_extremes_and_float_specials_roundtrip():
@@ -278,3 +235,49 @@ def test_split_list_absent_offsets_nonempty_means_all_empty():
         _NoOffsetsArray(0, pa.list_(pa.int64()))
     )
     assert len(lens0) == 0 and len(flat0) == 0
+
+
+def _blob_per_codec():
+    from parquetjs_spark.codecs import BSS, FLBA, FOR_BITPACK, INCR, INT96, RLE
+
+    ints = pa.array([1, None, 5, 7, 7, 7, 300] * 40, pa.int64())
+    strs = pa.array(["ab", None, "abc", "abd", "x" * 40] * 60)
+    fixed = pa.array([b"0123", None, b"4567"] * 40)
+    cases = [(ints, "int64", c) for c in (PLAIN, RLE, DICT_RLE, FOR_BITPACK, BSS, INT96)]
+    cases += [(strs, "string", c) for c in (PLAIN, DICT_RLE, FSST, INCR)]
+    cases += [(fixed, "binary", FLBA)]
+    return [
+        (codec, arrow_chunk.encode_arrow_column(arr, dtype, codec=codec))
+        for arr, dtype, codec in cases
+    ]
+
+
+def _patched(blob: bytes, pos: int, raw: bytes) -> bytes:
+    return blob[:pos] + raw + blob[pos + len(raw):]
+
+
+def test_corrupt_header_raises_value_error_naming_the_field():
+    """Unknown ids and length fields that disagree with the blob fail in
+    the header parse with a ValueError naming the field, before any
+    decompression; verify reports them as mismatches."""
+    for codec, (blob, stats) in _blob_per_codec():
+        sha = stats["sha256"]
+        bad = [
+            (_patched(blob, 4, bytes([200])), "dtype id 200"),
+            (_patched(blob, 5, bytes([200])), "codec id 200"),
+            (_patched(blob, 6, bytes([200])), "compression id 200"),
+            (_patched(blob, 16, (2**32 - 1).to_bytes(4, "little")), "levels_len 4294967295"),
+            (_patched(blob, 20, (2**32 - 1).to_bytes(4, "little")), "values_len 4294967295"),
+        ]
+        values_len = int.from_bytes(blob[20:24], "little")
+        for delta in (-1, 1):
+            patched = _patched(blob, 20, (values_len + delta).to_bytes(4, "little"))
+            bad.append((patched, f"values_len {values_len + delta}"))
+        # truncations: inside the header, at its end, and in the payload
+        for cut in (0, 3, 23, 24, len(blob) // 2, len(blob) - 1):
+            bad.append((blob[:cut], "header|values_len|levels_len"))
+        for corrupt, field in bad:
+            with pytest.raises(ValueError, match=field):
+                arrow_chunk.decode_arrow_column(corrupt)
+            assert not arrow_chunk.verify_arrow(corrupt, sha), (codec, field)
+        assert arrow_chunk.verify_arrow(blob, sha), codec

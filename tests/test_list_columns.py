@@ -7,11 +7,10 @@ flattened elements ride any scalar codec."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pytest
 
-from parquetjs_spark import arrow_chunk, chunk as chunklib
+from parquetjs_spark import arrow_chunk
 
 
 def rt_arrow(values, pa_elem, dtype, codec="auto"):
@@ -66,15 +65,6 @@ def test_list_null_elements_roundtrip():
     assert dtype == "list_int64"
     assert out.to_pylist() == arr.to_pylist()
     assert arrow_chunk.verify_arrow(blob, stats["sha256"])
-
-
-def test_list_pandas_path_delegates():
-    s = pd.Series([[1, 2], None, [3]], dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "list_int64")
-    out, dtype = chunklib.decode_chunk(blob)
-    assert dtype == "list_int64"
-    assert out.tolist() == [[1, 2], None, [3]]
-    assert chunklib.verify_chunk(blob, stats["sha256"])
 
 
 def test_list_spark_pipeline_embeddings(spark):
@@ -144,15 +134,6 @@ def test_nested_list_token_embeddings_shape():
     ]
     got, _ = rt_nested(vals, "list_list_float32")
     assert got == vals
-
-
-def test_nested_list_pandas_path_delegates():
-    s = pd.Series([[[1, 2], [3]], None, [[], [4]]], dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "list_list_int64")
-    out, dtype = chunklib.decode_chunk(blob)
-    assert dtype == "list_list_int64"
-    assert out.tolist() == [[[1, 2], [3]], None, [[], [4]]]
-    assert chunklib.verify_chunk(blob, stats["sha256"])
 
 
 def test_nested_list_spark_pipeline(spark):

@@ -10,10 +10,10 @@ and the FSST 64-byte parse grid.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from parquetjs_spark import chunk as chunklib
+from parquetjs_spark import arrow_chunk
 from parquetjs_spark.codecs import dictionary, for_bp, fsst, plain, rle
 
 FAST = settings(max_examples=40, deadline=None)
@@ -84,13 +84,11 @@ def test_fsst_parse_grid_boundaries(pad_ff, n):
     )
 )
 def test_chunk_int64_auto_roundtrip(values):
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "int64")
-    out, dtype = chunklib.decode_chunk(blob)
+    blob, stats = arrow_chunk.encode_arrow_column(pa.array(values, pa.int64()), "int64")
+    out, dtype = arrow_chunk.decode_arrow_column(blob)
     assert dtype == "int64"
-    got = [None if pd.isna(v) else int(v) for v in out.tolist()]
-    assert got == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert out.to_pylist() == values
+    assert arrow_chunk.verify_arrow(blob, stats["sha256"])
 
 
 @FAST
@@ -102,13 +100,11 @@ def test_chunk_int64_auto_roundtrip(values):
     )
 )
 def test_chunk_string_auto_roundtrip(values):
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "string")
-    out, dtype = chunklib.decode_chunk(blob)
+    blob, stats = arrow_chunk.encode_arrow_column(pa.array(values, pa.string()), "string")
+    out, dtype = arrow_chunk.decode_arrow_column(blob)
     assert dtype == "string"
-    got = [None if v is None else v for v in out.where(out.notna(), None).tolist()]
-    assert got == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert out.to_pylist() == values
+    assert arrow_chunk.verify_arrow(blob, stats["sha256"])
 
 
 @FAST
@@ -123,12 +119,12 @@ def test_chunk_string_auto_roundtrip(values):
     )
 )
 def test_chunk_list_int64_auto_roundtrip(values):
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "list_int64")
-    out, dtype = chunklib.decode_chunk(blob)
+    arr = pa.array(values, pa.list_(pa.int64()))
+    blob, stats = arrow_chunk.encode_arrow_column(arr, "list_int64")
+    out, dtype = arrow_chunk.decode_arrow_column(blob)
     assert dtype == "list_int64"
-    assert out.tolist() == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert out.to_pylist() == values
+    assert arrow_chunk.verify_arrow(blob, stats["sha256"])
 
 
 # --- FOR+bitpack / dictionary ------------------------------------------------
@@ -222,13 +218,12 @@ def test_list_string_element_nulls_roundtrip(values):
     )
 )
 def test_decimal_chunk_roundtrip(values):
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "decimal(12,2)")
-    out, dtype = chunklib.decode_chunk(blob)
+    arr = pa.array(values, pa.decimal128(12, 2))
+    blob, stats = arrow_chunk.encode_arrow_column(arr, "decimal(12,2)")
+    out, dtype = arrow_chunk.decode_arrow_column(blob)
     assert dtype == "decimal(12,2)"
-    got = [None if v is None else v for v in out.tolist()]
-    assert got == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert out.to_pylist() == values
+    assert arrow_chunk.verify_arrow(blob, stats["sha256"])
 
 
 @FAST
@@ -237,12 +232,11 @@ def test_decimal_chunk_roundtrip(values):
 def test_flba_chunk_roundtrip(values):
     from parquetjs_spark.codecs import FLBA
 
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "binary", codec=FLBA)
-    out, dtype = chunklib.decode_chunk(blob)
-    got = [None if v is None else bytes(v) for v in out.tolist()]
-    assert got == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    arr = pa.array(values, pa.binary())
+    blob, stats = arrow_chunk.encode_arrow_column(arr, "binary", codec=FLBA)
+    out, dtype = arrow_chunk.decode_arrow_column(blob)
+    assert out.to_pylist() == values
+    assert arrow_chunk.verify_arrow(blob, stats["sha256"])
 
 
 @FAST

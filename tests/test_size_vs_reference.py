@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from parquetjs_spark import chunk as chunklib, reference_model as ref
+from parquetjs_spark import arrow_chunk, reference_model as ref
 from parquetjs_spark.sources.synthetic import source_code_pdf
 
 
@@ -21,8 +22,8 @@ def our_total(series: pd.Series, dtype: str) -> int:
     (chunk headers + levels + payload all included)."""
     total = 0
     for lo in range(0, len(series), ref.ROW_GROUP_SIZE):
-        blob, _ = chunklib.encode_chunk(
-            series.iloc[lo : lo + ref.ROW_GROUP_SIZE].reset_index(drop=True), dtype
+        blob, _ = arrow_chunk.encode_arrow_column(
+            pa.array(series.iloc[lo : lo + ref.ROW_GROUP_SIZE]), dtype
         )
         total += len(blob)
     return total
